@@ -11,8 +11,9 @@ suffices; ``max_iter`` bounds the worst case.
 
 Scale notes: every round is one join + one aggregate on the edge list
 (shuffle on node id); ``localCheckpoint`` truncates the plan lineage each
-round so the job graph stays flat instead of growing exponentially; the
-convergence probe is a cheap `isEmpty` on the changed-labels frame.
+round so the job graph stays flat instead of growing exponentially. Each
+row carries its previous label as ``old_label``, so the convergence probe
+is a ``label != old_label`` flag filter plus one ``count()`` per round.
 """
 
 from __future__ import annotations
@@ -96,11 +97,13 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        # ONE action per round: the full-scan count materializes the lazy
-        # checkpoint (every partition — unlike isEmpty/take(1), which can
-        # stop early and leave the checkpoint partial) AND answers the
-        # convergence question. The old shape paid two blocking jobs per
-        # round (eager checkpoint, then a changed-rows join + isEmpty).
+        # ONE action per round: count() answers the convergence question
+        # and, since it computes every partition, completes the lazy
+        # checkpoint in the same job. isEmpty/take(1) may stop after a few
+        # partitions; doCheckpoint would then launch a second job for the
+        # missing ones (it never leaves the checkpoint partial). The old
+        # shape paid two blocking jobs per round (eager checkpoint, then a
+        # changed-rows join + isEmpty).
         # Same fixpoint: label != old_label is exactly the old
         # new-vs-previous label comparison, carried as a column.
         done = (

@@ -137,19 +137,30 @@ def enrich_skew_safe(
             F.percentile("volume", 0.50).alias("__q2"),
             F.percentile("volume", 0.75).alias("__q3"),
         )
-    # EXPLICIT repartition, not ENSURE_REQUIREMENTS: hash(symbol) upstream
+    # EXPLICIT placement, not ENSURE_REQUIREMENTS: hash(symbol) upstream
     # SATISFIES ClusteredDistribution(symbol, __chunk) — a subset clustering
     # is always sufficient — so if any plan change (e.g. AQE broadcasting
     # the rn join) leaves the stream hash(symbol)-partitioned, Catalyst
     # elides the finer exchange and the hot symbol silently lands back on
     # ONE window task. A user repartition is a hard requirement Spark keeps.
+    # Chunk k of a symbol goes to partition pmod(hash(symbol) + k, n): a
+    # hash of (symbol, __chunk) can still collide a hot symbol's chunks
+    # into one partition when n is small (4 cores → 4 partitions), while
+    # consecutive ids spread them round-robin over all n partitions.
+    # ``__pid`` joins the window keys (it is a function of symbol and
+    # __chunk, so the window groups are unchanged): a partition-id
+    # pass-through exchange satisfies any clustering that contains its id
+    # column, so the chunked window needs no second Exchange.
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    pid = F.pmod(F.hash("symbol") + F.col("__chunk"), F.lit(n)).cast("int")
     prepared = (
         unioned.join(F.broadcast(qt), "symbol")
-        .repartition("symbol", "__chunk")
+        .withColumn("__pid", pid)
+        .repartitionById(n, "__pid")
     )
     out = enrich(
         prepared,
-        window_partition=("symbol", "__chunk"),
+        window_partition=("symbol", "__chunk", "__pid"),
         quartile_cols=("__q1", "__q2", "__q3"),
     )
     return out.filter(F.col("__halo") == 0).select(*ENRICHED_COLUMNS)

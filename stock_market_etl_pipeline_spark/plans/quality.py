@@ -5,6 +5,13 @@ The reference runs 14 Great Expectations checks, each a separate scan
 single ``df.agg(...)`` — one job, one scan, which is the difference
 between 14×100 TB and 1×100 TB of I/O at scale (SURVEY.md §2.8).
 
+The same checks also run as observed metrics of another action
+(``observe_quality_suite``): ``run_pipeline`` gets the suite from its
+sink write with no job of its own. ``run_quality_suite`` keeps the
+aggregate form for callers that must gate BEFORE they write (the
+streaming gate and write-audit-publish). Both build their results with
+``check_results``.
+
 A check is (name, expression-that-counts-passing-rows, mostly-threshold).
 Success mirrors GX semantics: pass_fraction ≥ mostly. Suite success is
 passed/total ≥ 0.90 (reference ``src/data_quality.py:222``).
@@ -14,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -84,33 +91,95 @@ def run_quality_suite(
 
     The compound-uniqueness check rides in the same pass as
     ``count(*) == count(distinct key-struct)`` — no extra scan.
+
+    This is the gate-before-write form (its own job), for callers that
+    must decide before they write; ``observe_quality_suite`` computes the
+    same results as metrics of the write itself.
     """
-    aggs = []
-    agg_checks = [c for c in checks if c.pass_fraction is not None]
-    for i, c in enumerate(agg_checks):
-        aggs.append(c.pass_fraction.alias(f"__chk_{i}"))
+    aggs = _check_metrics(checks)
     if unique_key:
         aggs.append(F.count(F.lit(1)).alias("__total"))
         aggs.append(
             F.countDistinct(F.struct(*unique_key)).alias("__distinct_keys")
         )
     row = df.agg(*aggs).collect()[0]
+    return check_results(
+        row.asDict(), checks, df.columns, unique_key, success_threshold
+    )
 
+
+def observe_quality_suite(
+    df: DataFrame,
+    checks: list[Check],
+    observation: Observation,
+    extra_metrics: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The suite, with (symbol, date) as the unique key, as observed
+    metrics of whatever action consumes the returned frame (same rows and
+    columns as ``df``): no job of its own. ``observation.get`` then holds
+    the metrics ``check_results`` reads, plus ``extra_metrics``.
+
+    Spark rejects DISTINCT in observed metrics, so the key-uniqueness
+    count is exact without it: with each symbol's rows ordered by date, a
+    row repeats a key exactly when its predecessor's date equals its own,
+    so distinct keys = rows − Σ ``lag(struct(date)) <=> struct(date)``.
+    The struct keeps a NULL date comparable (struct(NULL) <=> struct(NULL)
+    is true) while the first row's missing predecessor (a NULL struct)
+    never matches. The window is enrich's own
+    ``partitionBy(symbol).orderBy(date)``, so it adds no Exchange.
+    """
+    key = F.struct("date")
+    w = Window.partitionBy("symbol").orderBy("date")
+    total = F.count(F.lit(1))
+    return (
+        df.withColumn("__dup_key", F.lag(key).over(w).eqNullSafe(key))
+        .observe(
+            observation,
+            *_check_metrics(checks),
+            total.alias("__total"),
+            (total - F.count(F.when(F.col("__dup_key"), 1)))
+            .alias("__distinct_keys"),
+            *extra_metrics,
+        )
+        .drop("__dup_key")
+    )
+
+
+def _check_metrics(checks: list[Check]) -> list[Column]:
+    """One aggregate per data check, aliased ``__chk_<i>`` in check order."""
+    agg_checks = [c for c in checks if c.pass_fraction is not None]
+    return [
+        c.pass_fraction.alias(f"__chk_{i}") for i, c in enumerate(agg_checks)
+    ]
+
+
+def check_results(
+    metrics: dict,
+    checks: list[Check],
+    columns: list[str],
+    unique_key: tuple[str, ...] | None = ("symbol", "date"),
+    success_threshold: float = 0.90,
+) -> tuple[bool, float, list[CheckResult]]:
+    """(success, rate, results) from the suite's metric values — the
+    ``__chk_<i>`` fractions and, with a ``unique_key``, ``__total`` and
+    ``__distinct_keys`` — and the checked frame's column names."""
     results: list[CheckResult] = []
     for c in checks:
         if c.column_exists is not None:
-            ok = c.column_exists in df.columns
+            ok = c.column_exists in columns
             results.append(CheckResult(c.name, ok, 1.0 if ok else 0.0))
+    agg_checks = [c for c in checks if c.pass_fraction is not None]
     for i, c in enumerate(agg_checks):
-        frac = float(row[f"__chk_{i}"] or 0.0)
+        frac = float(metrics[f"__chk_{i}"] or 0.0)
         results.append(CheckResult(c.name, frac >= c.mostly, frac))
     if unique_key:
-        ok = row["__total"] == row["__distinct_keys"]
+        total, distinct = metrics["__total"], metrics["__distinct_keys"]
+        ok = total == distinct
         results.append(
             CheckResult(
                 "compound_unique_" + "_".join(unique_key),
                 ok,
-                1.0 if ok else row["__distinct_keys"] / max(row["__total"], 1),
+                1.0 if ok else distinct / max(total, 1),
             )
         )
     passed = sum(1 for r in results if r.success)

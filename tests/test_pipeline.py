@@ -1,6 +1,8 @@
 """End-to-end pipeline test: raw JSON drops → cleaned/enriched parquet sink
 + validation gate + summary, through the real CLI-shaped entrypoint."""
 
+import threading
+
 from pyspark.sql import functions as F
 
 from stock_market_etl_pipeline_spark.pipeline import run_pipeline
@@ -112,3 +114,61 @@ def test_session_codegen_cache_sized_to_plan_working_set(spark):
     headline query on every bench pass — a 30-60% phantom regression).
     Pin the session config so a builder refactor can't silently drop it."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 4096
+
+
+def test_pipeline_all_malformed_drop_loads_nothing(spark, tmp_path):
+    """Every line malformed: the observed metrics still arrive (zero
+    rows reach the sink) and the corrupt count is exact."""
+    inp = tmp_path / "landing5"
+    inp.mkdir()
+    (inp / "bad.json").write_text('{"symbol": "X", \n' "nope\n" "{{{\n")
+
+    result = run_pipeline(spark, str(inp), str(tmp_path / "warehouse5"))
+    assert result.corrupt_records == 3
+    assert result.records_loaded == 0
+    assert result.unique_symbols == 0
+    assert not result.validation_passed
+
+
+def test_pipeline_failed_write_raises(spark, tmp_path):
+    """A sink path under a regular file cannot be written: run_pipeline
+    raises the write's error and never blocks on the observed metrics."""
+    inp = str(tmp_path / "landing6")
+    spark.createDataFrame(make_raw_rows("IBM", 5), RAW_QUOTE_SCHEMA) \
+        .write.mode("overwrite").json(inp)
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("x")
+    outcome = []
+
+    def run():
+        try:
+            run_pipeline(spark, inp, str(blocker / "sink"))
+            outcome.append(None)
+        except Exception as e:  # noqa: BLE001
+            outcome.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert outcome, "run_pipeline hung after a failed write"
+    assert outcome[0] is not None
+    assert "not a directory" in str(outcome[0])
+
+
+def test_pipeline_is_one_action(spark, tmp_path, raw_quotes):
+    """The health probe plus one write: at most 3 Spark jobs per run (the
+    shuffle map stage and the write), with no cache build, no quality
+    aggregate and no summary collect of their own."""
+    inp = str(tmp_path / "landing7")
+    raw_quotes.write.mode("overwrite").json(inp)
+    sc = spark.sparkContext
+    group = "test_pipeline_is_one_action"
+    sc.setJobGroup(group, "run_pipeline")
+    try:
+        result = run_pipeline(spark, inp, str(tmp_path / "warehouse7"))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result.records_loaded == 35
+    assert len(jobs) <= 3, jobs

@@ -54,6 +54,35 @@ def test_enrich_pipeline_single_scan_single_exchange(spark, qs):
     assert m and len(m.group(1).split(",")) == 6
 
 
+def test_pipeline_sink_frame_one_symbol_exchange_no_cache(spark, tmp_path):
+    """run_pipeline's one action: the frame handed to the sink shuffles
+    once on hash(symbol) at the session's shuffle width, caches nothing,
+    and carries the corrupt count and the quality suite as two observed
+    metrics. The sink's own repartition(symbol) adds no second shuffle."""
+    from stock_market_etl_pipeline_spark.pipeline import sink_plan
+    from stock_market_etl_pipeline_spark.plans.quality import (
+        stock_quality_checks,
+    )
+    from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
+
+    from conftest import make_raw_rows
+
+    inp = str(tmp_path / "drop")
+    spark.createDataFrame(make_raw_rows("IBM", 3), RAW_QUOTE_SCHEMA) \
+        .write.mode("overwrite").json(inp)
+    frame = sink_plan(spark, inp, stock_quality_checks()).frame
+    plan = plan_of(frame)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert count_nodes(plan, "Exchange") == 1
+    assert re.findall(r"hashpartitioning\((\w+)#\d+, (\d+)\)", plan) == [
+        ("symbol", width)
+    ]
+    assert "InMemoryRelation" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert count_nodes(plan, "CollectMetrics") == 2
+    assert count_nodes(plan_of(frame.repartition("symbol")), "Exchange") == 1
+
+
 def test_predictions_single_scan(spark, qs):
     plan = plan_of(qs["predictions"](spark, SF_DIR))
     assert count_nodes(plan, "Scan parquet") == 1
